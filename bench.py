@@ -112,6 +112,11 @@ def _time_media(spark, n_per_format: int = 8) -> float | None:
             media.unpersist()
 
 
+#: per-trigger phases of StreamingQueryProgress.durationMs the streaming
+#: sidecar sums per run
+_TRIGGER_PHASES = ("addBatch", "latestOffset", "queryPlanning", "walCommit")
+
+
 def _time_streaming(
     spark, n_docs: int = 120, n_runs: int = 3
 ) -> tuple[float, dict] | None:
@@ -130,7 +135,10 @@ def _time_streaming(
     #1); the cold first run still rides in the sidecar samples, and
     every run carries a startup/drain SPLIT (drain = sum of reported
     batchDuration; startup = total - drain) so a regression is
-    attributable to the pipeline vs stream machinery (VERDICT r7 #7).
+    attributable to the pipeline vs stream machinery (VERDICT r7 #7),
+    plus ``duration_ms``: the per-phase ``durationMs`` of every trigger
+    in ``recentProgress``, summed (``addBatch`` is the admission
+    pipeline, the other three are stream machinery).
     Returns (headline, sidecar) or None only on setup failure so the
     bench contract never breaks."""
     import shutil
@@ -166,13 +174,8 @@ def _time_streaming(
                 q.stop()
                 raise TimeoutError("streaming ingest did not drain in 300s")
             elapsed = round(time.monotonic() - start, 3)
-            drain = round(
-                sum(
-                    p["batchDuration"] for p in (q.recentProgress or [])
-                )
-                / 1000.0,
-                3,
-            )
+            progress = q.recentProgress or []
+            drain = round(sum(p["batchDuration"] for p in progress) / 1000.0, 3)
             n = spark.read.parquet(out).count()
             assert n == n_docs, f"streaming ingest admitted {n}/{n_docs}"
             samples.append(elapsed)
@@ -181,7 +184,11 @@ def _time_streaming(
                     "total": elapsed,
                     "drain": drain,
                     "startup": round(elapsed - drain, 3),
-                    "n_batches": len(q.recentProgress or []),
+                    "n_batches": len(progress),
+                    "duration_ms": {
+                        k: sum(p["durationMs"].get(k, 0) for p in progress)
+                        for k in _TRIGGER_PHASES
+                    },
                 }
             )
         first_warm = 1 if len(samples) > 1 else 0

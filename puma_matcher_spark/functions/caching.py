@@ -34,6 +34,12 @@ interleave.  A frame persisted by an OUTSIDE owner (storage level set
 but no ring entry matches — e.g. the session-memoized candidate frames)
 is still returned without enrollment: the ring must never unpersist a
 cache it does not own.
+
+The storage-level probe runs FIRST: a ring entry is always a cached
+plan, so a plan the CacheManager does not hold cannot match one, and the
+common never-seen-plan path persists and enrolls without any
+``sameSemantics`` canonicalisation under the lock.  Only an
+already-cached plan pays the ring scan.
 """
 
 from __future__ import annotations
@@ -82,19 +88,20 @@ def persist_rotating(
     cannot unpersist an entry that is still the live cache for
     identical in-flight plans."""
     with _LOCK:
-        for i, entry in enumerate(_RING):
-            if _same_plan(df, entry):
-                _RING.append(_RING.pop(i))  # refresh FIFO position
-                df.persist(level)  # alias persist: same CacheManager entry
-                return df
         try:
             lvl = df.storageLevel
-            already = lvl.useMemory or lvl.useDisk or lvl.useOffHeap
+            cached = lvl.useMemory or lvl.useDisk or lvl.useOffHeap
         except Exception:
-            already = False  # storage-level probe failed — enroll normally
+            cached = False  # storage-level probe failed — enroll normally
+        if cached:
+            for i, entry in enumerate(_RING):
+                if _same_plan(df, entry):
+                    _RING.append(_RING.pop(i))  # refresh FIFO position
+                    break
+            # a match shares the owner's CacheManager entry; no match
+            # means an outside owner (caller persist / memo) — not ours
+            return df
         df.persist(level)
-        if already:
-            return df  # outside owner (caller persist / memo) — not ours
         _RING.append(df)
         while len(_RING) > _CAPACITY:
             oldest = _RING.pop(0)

@@ -28,6 +28,7 @@ the alternative (the scan plans its own splits).
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass
 
@@ -43,6 +44,8 @@ from pyspark.sql.datasource import (
 
 #: default split-planning target: bytes of text per input partition
 DEFAULT_TARGET_BYTES = 32 * 1024 * 1024
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -181,7 +184,14 @@ class ManifestTextStreamReader(SimpleDataSourceStreamReader):
     ``readBetweenOffsets`` replays any [start, end) slice
     deterministically for recovery.  The incremental-ingest analogue of
     the reference's polling pipeline — new files land, a manifest row is
-    appended, the stream picks the document up on the next trigger."""
+    appended, the stream picks the document up on the next trigger.
+
+    ``max_rows_per_trigger`` (rows one micro-batch reads; unset or 0
+    reads everything available) is supported ONLY with a
+    ``processingTime`` trigger.  Spark runs Python micro-batch sources
+    under ``availableNow`` as a single batch, so a capped reader stops
+    after its first slice and strands the rest of the backlog until the
+    next start.  Setting the option logs a warning saying so."""
 
     def __init__(self, options):
         self.manifest = options.get("manifest")
@@ -192,10 +202,18 @@ class ManifestTextStreamReader(SimpleDataSourceStreamReader):
         # rows one micro-batch ingests — the manifest_text analogue of
         # the file source's maxFilesPerTrigger.  0/unset = drain
         # everything available in one batch (the historical behaviour;
-        # the benched workload never sets this).  Under availableNow the
-        # stream keeps triggering until caught up, so a cap splits the
-        # drain into ceil(backlog/cap) batches instead of one.
+        # the benched workload never sets this).  processingTime only:
+        # the reader cannot see the trigger, so it warns where the
+        # option is set (see the class docstring).
         self.max_rows_per_trigger = int(options.get("max_rows_per_trigger", "0"))
+        if self.max_rows_per_trigger > 0:
+            _log.warning(
+                "manifest_text: max_rows_per_trigger=%d is supported only "
+                "with a processingTime trigger; under availableNow Spark "
+                "runs this source as one batch and the rest of the "
+                "backlog waits for the next start",
+                self.max_rows_per_trigger,
+            )
 
     def initialOffset(self) -> dict:
         return {"rows": 0}
@@ -229,7 +247,9 @@ class ManifestTextDataSource(DataSource):
     """``spark.read.format("manifest_text").option("manifest", csv)`` →
     (doc_id, file_path, text), split-planned and pushdown-pruned; the
     same format under ``spark.readStream`` tails manifest appends as
-    micro-batches."""
+    micro-batches.  The stream-only ``max_rows_per_trigger`` option
+    requires a ``processingTime`` trigger (see
+    :class:`ManifestTextStreamReader`)."""
 
     @classmethod
     def name(cls) -> str:

@@ -31,6 +31,19 @@ def test_rows_only_queries_execute(spark, sf_small):
         assert n1 >= 0
 
 
+def test_ingest_and_dedup_kernels_match_oracle(spark, sf_small):
+    """Default-lane parity smoke: the ingest and dedup kernels the
+    streaming-ingest benchmark drives (exact and MinHash-LSH
+    batch-vs-corpus admission, blocked-pair connected components) must
+    match their DuckDB twins, so the fast lane still exercises the
+    oracle while the full sweep above stays slow-marked."""
+    names = ["incremental_ingest", "incremental_near_dups", "dedup_components_cc"]
+    results = run_all(spark, sf_small, names=names)
+    failed = [str(r) for r in results if not r.ok]
+    assert not failed, "\n".join(failed)
+    assert sorted(r.name for r in results) == sorted(names)
+
+
 def test_driver_window_budget():
     """The external driver's CORRECTNESS gate covers only the first 50
     entries of queries().  Every _PRIORITY name must exist, the list

@@ -220,22 +220,35 @@ def test_stream_tails_manifest_appends(spark, corpus, tmp_path):
     assert out_rows == [(4, "delta text")]
 
 
-def test_stream_reader_max_rows_per_trigger_caps_each_read(corpus):
+def test_stream_reader_max_rows_per_trigger_caps_each_read(corpus, caplog):
     """r12 (r11 verdict #6): `max_rows_per_trigger` caps the manifest
     rows one read() consumes (offsets advance by the capped slice, so
     successive triggers walk the backlog); unset keeps the historical
     drain-everything behaviour.  Reader-level pin — Spark's Python
     micro-batch wrapper falls back to SINGLE-batch execution under
     availableNow, so the capped mode is driven by a processingTime
-    trigger (scripts/streaming_trigger_study.py), not availableNow."""
+    trigger (scripts/streaming_trigger_study.py), not availableNow.
+    The reader cannot see the trigger, so setting the cap logs that
+    risk where the option is set; an unset cap logs nothing."""
+    import logging
+
     from puma_matcher_spark.sources.pydatasource import (
         ManifestTextStreamReader,
     )
 
     manifest, files = corpus
-    capped = ManifestTextStreamReader(
-        {"manifest": str(manifest), "max_rows_per_trigger": "2"}
-    )
+    with caplog.at_level(
+        logging.WARNING, logger="puma_matcher_spark.sources.pydatasource"
+    ):
+        capped = ManifestTextStreamReader(
+            {"manifest": str(manifest), "max_rows_per_trigger": "2"}
+        )
+        (rec,) = caplog.records
+        assert "processingTime" in rec.getMessage()
+        assert "availableNow" in rec.getMessage()
+        caplog.clear()
+        uncapped = ManifestTextStreamReader({"manifest": str(manifest)})
+        assert not caplog.records
     rows1, off1 = capped.read({"rows": 0})
     rows1 = list(rows1)
     assert [r[0] for r in rows1] == [1, 2] and off1 == {"rows": 2}
@@ -245,6 +258,5 @@ def test_stream_reader_max_rows_per_trigger_caps_each_read(corpus):
     rows3, off3 = capped.read(off2)
     assert list(rows3) == [] and off3 == {"rows": 3}
 
-    uncapped = ManifestTextStreamReader({"manifest": str(manifest)})
     rows, off = uncapped.read({"rows": 0})
     assert [r[0] for r in list(rows)] == [1, 2, 3] and off == {"rows": 3}
