@@ -1,57 +1,42 @@
-"""Bounded persist management for plan-builder functions.
+"""Session-scoped caching of derived frames: one policy, one owner.
 
-Operators that fan one intermediate frame into several plan branches
-(the TF-IDF weight frame, the shingle frame) persist it so the branches
-don't each re-derive the chain from the scan.  But a builder function
-has no lifecycle hook to unpersist — returning the frame hands the plan
-to the caller, and the cached RDD would outlive every use (one leaked
-cache entry per call for the life of the session).
+Two kinds of cache entry, both owned by this module and its one lock:
 
-``persist_rotating`` bounds that: each persisted frame is enrolled in a
-small FIFO ring; enrolling past the capacity unpersists the oldest.
-Long-lived sessions converge to at most ``_CAPACITY`` cached
-intermediates instead of growing without limit, while the frames most
-recently built (the ones whose plans are still live) stay cached.
+* **Memo entries** (:func:`memoized`): a derived frame shared by many
+  queries (the scored candidates, the purchase edge list) is built once
+  per key and pinned until :func:`drain` — the reference caches every
+  stage output once (Pipeline.scala:203) and memoizes its sources
+  (SqlDataSource.scala:48).  Every frame the build persists, its
+  intermediates included, is recorded with the entry.
+* **Ring entries** (:func:`persist_rotating`): a plan builder that fans
+  one intermediate into several branches persists it, but has no
+  lifecycle hook to unpersist it.  The ring bounds that to ``_CAPACITY``
+  entries, FIFO: enrolling past capacity unpersists the oldest.  Frames
+  with identical plans share one CacheManager entry, so they share one
+  ring slot, and a repeat refreshes that slot's FIFO position.  A frame
+  cached by an outside owner (no ring entry matches its plan) is never
+  enrolled: the ring only unpersists caches it owns.
 
-Identical-plan calls share ONE ring slot (r11): Spark's CacheManager
-dedupes ``persist`` by canonicalized plan, so when the same query
-builder runs repeatedly (a bench loop, a retried job) every call's
-frame shares one cache entry — enrolling each call separately meant the
-ring filled with aliases of the SAME entry and evicting an old alias
-unpersisted the data the newest alias was about to reuse (measured: a
-5-run picture_lsh_pairs loop recomputed its 60 s chain on the rollover
-run).  A frame whose plan is already cached is therefore NOT
-re-enrolled; the original enrollment keeps owning the entry.
-
-r12 (two r11-advice hardenings): the plan-match probe, the persist and
-the enrollment all happen under ``_LOCK`` (two threads persisting
-identical plans concurrently could otherwise both observe "not cached"
-and double-enroll — the alias-eviction bug again), and a plan match
-REFRESHES the owning entry's FIFO position (``DataFrame.sameSemantics``
-identifies the canonical ring entry), so a hot identical-plan frame can
-no longer be evicted mid-loop once ``_CAPACITY`` other persists
-interleave.  A frame persisted by an OUTSIDE owner (storage level set
-but no ring entry matches — e.g. the session-memoized candidate frames)
-is still returned without enrollment: the ring must never unpersist a
-cache it does not own.
-
-The storage-level probe runs FIRST: a ring entry is always a cached
-plan, so a plan the CacheManager does not hold cannot match one, and the
-common never-seen-plan path persists and enrolls without any
-``sameSemantics`` canonicalisation under the lock.  Only an
-already-cached plan pays the ring scan.
+:func:`drain` (which ``sources.testdata.reset_table_cache`` calls)
+releases both kinds, intermediates included, so a cache-cold run rides
+no frame an earlier run built.  Every entry is plain-persisted (lineage
+intact), so a consumer of a drained frame recomputes rather than fails.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _CAPACITY = 8
 _RING: list[DataFrame] = []
-_LOCK = threading.Lock()
+#: one record per memo entry: (its table, its key, every frame it pinned)
+_MEMO: list[tuple[dict, Hashable, list[DataFrame]]] = []
+#: reentrant: a memo build may itself call persist_rotating
+_LOCK = threading.RLock()
 
 
 def _same_plan(a: DataFrame, b: DataFrame) -> bool:
@@ -61,20 +46,66 @@ def _same_plan(a: DataFrame, b: DataFrame) -> bool:
         return False  # foreign session / torn-down plan — no match
 
 
+def is_cached(df: DataFrame) -> bool:
+    """True when the CacheManager holds ``df``'s plan at any level."""
+    try:
+        lvl = df.storageLevel
+    except Exception:
+        return False  # storage-level probe failed — treat as uncached
+    return lvl.useMemory or lvl.useDisk or lvl.useOffHeap
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist(blocking=False)
+    except Exception:
+        pass  # session torn down — nothing to free
+
+
 def drain() -> None:
-    """Unpersist and drop every ring entry.  The bench calls this (with
-    ``sources.testdata.reset_table_cache``) before each query's
-    designated CACHE-COLD sample, so persist-wave rows cannot silently
-    ride caches built by an earlier invocation (r11 verdict #2); safe
-    because every enrolled frame is plain-persisted (lineage intact —
-    consumers recompute, never fail)."""
+    """Unpersist every memo entry (intermediates included) and every
+    ring entry, and empty the memo tables."""
     with _LOCK:
+        while _MEMO:
+            table, key, frames = _MEMO.pop()
+            table.pop(key, None)
+            for df in frames:
+                _unpersist(df)
         while _RING:
-            df = _RING.pop()
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass  # session torn down — nothing to free
+            _unpersist(_RING.pop())
+
+
+def memoized(
+    table: dict,
+    key: Hashable,
+    build: Callable[[Callable[[DataFrame], DataFrame]], DataFrame],
+) -> DataFrame:
+    """``table[key]``, building it on first use as ``build(pin)``.
+
+    ``pin`` persists a frame at ``MEMORY_AND_DISK`` and records it with
+    the entry; the builder pins any intermediate it wants cached, and
+    its result is pinned too.  The lock is held across the build:
+    concurrent first callers would otherwise each run the chain and leak
+    duplicate caches.  :func:`drain` drops the entry and unpersists
+    everything pinned for it."""
+    with _LOCK:
+        if key in table:
+            return table[key]
+        frames: list[DataFrame] = []
+
+        def pin(df: DataFrame) -> DataFrame:
+            frames.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+            return df
+
+        try:
+            out = pin(build(pin))
+        except BaseException:
+            for df in frames:
+                _unpersist(df)
+            raise
+        table[key] = out
+        _MEMO.append((table, key, frames))
+        return out
 
 
 def persist_rotating(
@@ -82,31 +113,19 @@ def persist_rotating(
 ) -> DataFrame:
     """Persist ``df`` and enroll it in the bounded ring; evicts (and
     unpersists) the oldest enrolled frame beyond capacity.  A frame
-    whose plan is already cached (CacheManager plan-match — e.g. the
-    same builder re-invoked) is returned without a second enrollment,
-    and the OWNING ring entry is moved to the ring tail so rollover
-    cannot unpersist an entry that is still the live cache for
-    identical in-flight plans."""
+    whose plan is already cached is returned without a second
+    enrollment; if a ring entry owns that plan, the entry moves to the
+    ring tail.  The storage-level probe runs first, so a never-seen plan
+    pays no ``sameSemantics`` scan."""
     with _LOCK:
-        try:
-            lvl = df.storageLevel
-            cached = lvl.useMemory or lvl.useDisk or lvl.useOffHeap
-        except Exception:
-            cached = False  # storage-level probe failed — enroll normally
-        if cached:
+        if is_cached(df):
             for i, entry in enumerate(_RING):
                 if _same_plan(df, entry):
                     _RING.append(_RING.pop(i))  # refresh FIFO position
                     break
-            # a match shares the owner's CacheManager entry; no match
-            # means an outside owner (caller persist / memo) — not ours
             return df
         df.persist(level)
         _RING.append(df)
         while len(_RING) > _CAPACITY:
-            oldest = _RING.pop(0)
-            try:
-                oldest.unpersist(blocking=False)
-            except Exception:
-                pass  # session torn down — nothing to free
+            _unpersist(_RING.pop(0))
     return df

@@ -83,16 +83,13 @@ def curate_documents(
     #    keep_exact localCheckpoint, so a persisted bucket frame is never
     #    reusable across runs — it only piles dead cache entries into the
     #    rotating ring (measured +1.9 s on curation_report, r11).
-    #    A RUN-SCOPED persist (``buckets_out``, r12 — persist, self-join,
-    #    unpersist after ``drops`` materializes) was MEASURED AND
-    #    REVERTED: 5 interleaved worktree A/B pairs at sf0.1 put
-    #    curation_report at 4.3-7.0 s without it vs 6.7-8.3 s with it —
-    #    at this scale the two join sides derive the chain in parallel
-    #    across idle cores, while the persist serializes a cache-build
-    #    pass ahead of the join and pays the cache write on top.  The
-    #    facility stays available on lsh_candidate_pairs for
-    #    capacity-planned corpus runs where re-deriving the 128-minhash
-    #    chain per side dominates any cache write.
+    #    A run-scoped persist of the bucket frame (persist, self-join,
+    #    unpersist after ``drops`` materializes) was measured slower too:
+    #    5 interleaved A/B pairs at sf0.1 put curation_report at
+    #    4.3-7.0 s without it vs 6.7-8.3 s with it — at this scale the
+    #    two join sides derive the chain in parallel across idle cores,
+    #    while the persist serializes a cache-build pass ahead of the
+    #    join and pays the cache write on top.
     cand = dd.minhash_dedup_pairs(docs1, persist_buckets=False)
     verified = dd.jaccard_for_pairs(docs1, cand).where(
         F.col("jaccard") >= jaccard_threshold

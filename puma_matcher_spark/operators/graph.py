@@ -24,13 +24,14 @@ connected-components loop.
 
 from __future__ import annotations
 
-import os
+import threading
 import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions.caching import is_cached
 from puma_matcher_spark.functions.rounding import pround
 
 #: Node-count ceiling below which the per-round small frame (ranks /
@@ -66,9 +67,6 @@ BROADCAST_NODES_MAX = 500_000
 #:   9 on BOTH loops, so the target sits at 16 MB ≈ 230k edge rows);
 #: * the 128 MB floor takes over at cluster scale so tasks stay in the
 #:   guide's 100 MB-1 GB band no matter the core count.
-#:
-#: ``PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS`` overrides: >0 forces a count,
-#: -1 disables the scoping (session conf rules), unset/0 = auto.
 _EDGE_ROW_BYTES = 64
 _LOOP_LOCAL_TARGET = 16 << 20
 _LOOP_SCALE_TARGET = 128 << 20
@@ -77,11 +75,6 @@ _LOOP_SCALE_TARGET = 128 << 20
 def loop_shuffle_partition_count(spark, n_rows: int) -> int:
     """Shuffle-partition count for an iterative graph loop over
     ``n_rows`` edge rows (see the sizing note above)."""
-    override = int(
-        os.environ.get("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS", "0") or "0"
-    )
-    if override > 0:
-        return override
     est_bytes = max(1, n_rows) * _EDGE_ROW_BYTES
     cores = spark.sparkContext.defaultParallelism
     local = min(cores, -(-est_bytes // _LOOP_LOCAL_TARGET))
@@ -89,34 +82,33 @@ def loop_shuffle_partition_count(spark, n_rows: int) -> int:
     return max(1, local, at_scale)
 
 
+#: held by the one loop scope that owns ``spark.sql.shuffle.partitions``
+_SHUFFLE_SCOPE = threading.Lock()
+
+
 @contextmanager
 def loop_shuffle_partitions(spark, n_rows: int):
     """Scope ``spark.sql.shuffle.partitions`` to a size derived from the
-    loop's edge count; restores the session value on exit.  No-op when
-    ``PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS=-1``.  Session-wide while held
-    (Spark has no per-plan shuffle-partition knob), which is safe here:
-    the loops are driver-controlled and the engine runs queries
-    sequentially per session."""
-    if os.environ.get("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS") == "-1":
+    loop's edge count; restores the session value on exit.  The setting
+    is session-wide (Spark has no per-plan knob), so one scope owns it at
+    a time: a scope entered while another holds it (a ``foreachBatch``
+    thread sharing the session) leaves the conf alone and runs at the
+    session's value, instead of restoring over the owner's setting."""
+    if not _SHUFFLE_SCOPE.acquire(blocking=False):
         yield
         return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(loop_shuffle_partition_count(spark, n_rows)),
-    )
     try:
-        yield
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(loop_shuffle_partition_count(spark, n_rows)),
+        )
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _is_persisted(df: DataFrame) -> bool:
-    """True when the caller already persisted (or checkpointed) the
-    frame — the iterative loops then neither re-persist nor unpersist
-    it, so memoized shared inputs survive across queries."""
-    lvl = df.storageLevel
-    return lvl.useMemory or lvl.useDisk
+        _SHUFFLE_SCOPE.release()
 
 
 #: materialization cadence for the iterative loops' stats-reset barrier:
@@ -287,7 +279,7 @@ def pagerank(
     # lineitem ⋈ distinct — run ONCE instead of once per probe.  A
     # caller-persisted frame (e.g. the memoized purchase edge list) is
     # left alone: not re-persisted, and NOT unpersisted on exit.
-    caller_persisted = _is_persisted(edges)
+    caller_persisted = is_cached(edges)
     if not caller_persisted:
         edges = edges.persist()
     # materialize the edge cache and size the loop's shuffle partitions
@@ -436,7 +428,7 @@ def label_propagation(
     (``_round_barrier`` — deep n_iter must not hit the BigInteger
     size-estimate blowup).
     """
-    caller_persisted = _is_persisted(edges)
+    caller_persisted = is_cached(edges)
     sym = edges if caller_persisted else edges.persist()
     # size the loop's shuffle partitions from the measured edge count
     # (r12 — see loop_shuffle_partitions); the count materializes the

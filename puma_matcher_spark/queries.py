@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions import caching
 from puma_matcher_spark.functions.ids import pair_id
 from puma_matcher_spark.functions.rounding import (
     money_units,
@@ -38,11 +39,7 @@ from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
 from puma_matcher_spark.operators import scorelist as sl
 from puma_matcher_spark.operators import stats as st
-from puma_matcher_spark.sources.testdata import (
-    Tables,
-    load_tables,
-    register_cache_reset,
-)
+from puma_matcher_spark.sources.testdata import Tables, load_tables
 
 # --------------------------------------------------------------------------
 # Shared SQL view fragments (DuckDB oracle side). The Spark twins live in
@@ -154,27 +151,9 @@ def _all_cand_ctes() -> str:
 
 
 # Scored-candidate frames are memoized per (session, sf_dir, family) and
-# persisted — the reference caches every stage output (Pipeline.scala:203)
-# and memoizes sources (SqlDataSource.scala:48); without this the TF chain
-# re-scans lineitem ~7× per consuming query.  The lock is held across the
-# build: concurrent first callers would otherwise each run the chain and
-# leak duplicate persisted frames (only one setdefault winner would be
-# reachable); the brief serial section costs less than duplicated work.
+# pinned in functions.caching — without this the TF chain re-scans
+# lineitem ~7× per consuming query.
 _CAND_CACHE: dict[tuple, DataFrame] = {}
-_CAND_LOCK = threading.Lock()
-
-
-def _reset_derived_caches() -> None:
-    """Unpersist and drop the memoized derived frames (registered with
-    sources.testdata.reset_table_cache so one call clears every layer)."""
-    with _CAND_LOCK:
-        for cache in (_CAND_CACHE, _EDGE_CACHE):
-            for df in cache.values():
-                df.unpersist()
-            cache.clear()
-
-
-register_cache_reset(_reset_derived_caches)
 
 
 def _doc_count_scalar(tf: DataFrame):
@@ -192,16 +171,12 @@ def _doc_count_scalar(tf: DataFrame):
 
 def _entity_candidates(t: Tables, which: str = "person") -> DataFrame:
     """Spark twin of _tf_chain's {p}cand."""
-    from pyspark import StorageLevel
 
-    key = (t.spark.sparkContext.applicationId, t.sf_dir, which)
-    with _CAND_LOCK:
-        if key in _CAND_CACHE:
-            return _CAND_CACHE[key]
+    def build(pin):
         ents = (
             t.entities() if which == "person" else t.entities_secondary_orders()
         )
-        tf = m.entity_tf(ents).persist(StorageLevel.MEMORY_AND_DISK)
+        tf = pin(m.entity_tf(ents))
         # N as a scalar subquery over the persisted tf frame — the old
         # eager .count() re-scanned the entity table at plan-build time
         # (reference EntitiesMatcherV2.scala:44-52 pays the same double
@@ -210,11 +185,12 @@ def _entity_candidates(t: Tables, which: str = "person") -> DataFrame:
         capped = m.cap_entity_frequency(tf, 2000, doc_count)
         pairs = m.entity_pairs(capped)
         pairs_idf = sc.with_idf(pairs, tf, doc_count)
-        out = sc.score_entity_pairs(
+        return sc.score_entity_pairs(
             pairs_idf, tf, which, 1 if which == "person" else 10
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _CAND_CACHE[key] = out
-        return out
+        )
+
+    key = (t.spark.sparkContext.applicationId, t.sf_dir, which)
+    return caching.memoized(_CAND_CACHE, key, build)
 
 
 def _all_candidates(t: Tables) -> DataFrame:
@@ -2537,10 +2513,9 @@ def q_weight_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of editing the entry point."""
     from pyspark.sql.window import Window
 
-    from puma_matcher_spark.functions.caching import persist_rotating
     from puma_matcher_spark.operators.weights import assert_training_envelope
 
-    cand = persist_rotating(_all_candidates(load_tables(spark, sf_dir)))
+    cand = caching.persist_rotating(_all_candidates(load_tables(spark, sf_dir)))
     assert_training_envelope(cand)
     wmax = Window.partitionBy("document_version2_id", "score_type")
     ctx = cand.withColumn(
@@ -2671,7 +2646,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ONE token-less predicate (equiv. to size(tokens)>0; see
     # textstats.has_tokens for the proof and the cost rationale)
     docs = docs.where(ts.has_tokens(F.col("text")))
-    return dd.simhash64(docs, method="mapside")  # ~6x faster than the explode path at sf0.1 (0.09 vs 0.59 s); identical md5 arithmetic, same oracle
+    return dd.simhash64(docs)
 
 
 _SIMHASH128_CTE = f"""WITH toksl AS (SELECT doc_id, {_LLM_TOKS} AS tk FROM documents),
@@ -3373,9 +3348,7 @@ def q_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dd.minhash_dedup_pairs(docs)
     # persisted (r11): both score-join sides otherwise re-run the full
     # tokenize→md5→bit-vote simhash pass over the corpus
-    from puma_matcher_spark.functions.caching import persist_rotating
-
-    sh = persist_rotating(dd.simhash64(docs, method="mapside"))  # ~6x faster than the explode path at sf0.1 (0.09 vs 0.59 s); identical md5 arithmetic, same oracle
+    sh = caching.persist_rotating(dd.simhash64(docs))
     s1 = sh.select(F.col("doc_id").alias("doc1_id"), F.col("simhash").alias("_s1"))
     s2 = sh.select(F.col("doc_id").alias("doc2_id"), F.col("simhash").alias("_s2"))
     return (
@@ -3446,7 +3419,7 @@ def q_picture_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from puma_matcher_spark.operators.picture import minhash_lsh_pairs_portable
 
     docs = load_tables(spark, sf_dir).llm_documents()
-    sh = dd.simhash64(docs, method="mapside")  # ~6x faster than the explode path at sf0.1 (0.09 vs 0.59 s); identical md5 arithmetic, same oracle
+    sh = dd.simhash64(docs)
     return minhash_lsh_pairs_portable(
         sh, id_col="doc_id", fp_col="simhash", threshold=0.3
     )
@@ -3656,7 +3629,6 @@ def q_dedup_person_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploits that blocked pairs form a clique per blocking key (one key
     per person), so the expected component is min(id) per key — an
     independent closed-form check of the fixpoint."""
-    from puma_matcher_spark.functions.caching import persist_rotating
     from puma_matcher_spark.operators.dedup import (
         blocked_pairs,
         clean_names,
@@ -3667,7 +3639,9 @@ def q_dedup_person_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blocking-envelope guard plus the pair join's two sides otherwise
     # each re-run the diacritics-fold pandas-UDF chain (3 ArrowEvalPython
     # passes over persons; 1 after)
-    persons = persist_rotating(clean_names(load_tables(spark, sf_dir).persons()))
+    persons = caching.persist_rotating(
+        clean_names(load_tables(spark, sf_dir).persons())
+    )
     edges = blocked_pairs(persons)
     return dedup_lookup(persons, edges)
 
@@ -6668,9 +6642,7 @@ def q_zorder3_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: queries (pagerank_mass, pagerank_top, purchase_communities,
 #: purchase_kcore); its derivation — orders ⋈ lineitem → distinct →
 #: symmetrize — dominates each query's wall-clock, so it is memoized
-#: per (session, sf_dir) and persisted exactly like the scored-candidate
-#: frames above (_CAND_CACHE) and the reference's stage-output cache
-#: (Pipeline.scala:203).
+#: per (session, sf_dir) like the scored candidates (_CAND_CACHE).
 _EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -6681,10 +6653,8 @@ def _purchase_edges(t: Tables) -> DataFrame:
     sides disjoint.  Symmetrizing means no node is a sink, so the
     PageRank loop skips its per-iteration dangling-mass job (one join +
     one aggregate per round, nothing else)."""
-    key = (t.spark.sparkContext.applicationId, t.sf_dir)
-    with _CAND_LOCK:
-        if key in _EDGE_CACHE:
-            return _EDGE_CACHE[key]
+
+    def build(pin):
         o, li = t.raw("orders"), t.raw("lineitem")
         # a NULL endpoint is not an edge: concat('c', NULL) yields a NULL
         # node id that silently DROPS out of the iteration's equi-joins,
@@ -6698,11 +6668,12 @@ def _purchase_edges(t: Tables) -> DataFrame:
             )
             .distinct()
         )
-        edges = cs.unionByName(
+        return cs.unionByName(
             cs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).persist()
-        _EDGE_CACHE[key] = edges
-        return edges
+        )
+
+    key = (t.spark.sparkContext.applicationId, t.sf_dir)
+    return caching.memoized(_EDGE_CACHE, key, build)
 
 
 @register(

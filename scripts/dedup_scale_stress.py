@@ -81,7 +81,7 @@ def corpus(spark, n_docs: int):
 
 
 def simhash_band_candidates(docs, max_hamming: int = 3):
-    sh = dd.simhash64(docs, method="mapside")
+    sh = dd.simhash64(docs)
     n_bands = max_hamming + 1
     width = 60 // n_bands
     bands = sh.select(

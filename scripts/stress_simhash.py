@@ -64,10 +64,13 @@ def main() -> None:
     # bit-identical on a deterministic sample (checksums above already
     # cover the aggregate; this pins per-row equality)
     sample = docs.where(F.col("doc_id") % 97 == 0)
-    a = {(r["doc_id"], r["simhash"]) for r in dd.simhash64(sample).collect()}
+    a = {
+        (r["doc_id"], r["simhash"])
+        for r in dd.simhash64(sample, method="explode").collect()
+    }
     b = {
         (r["doc_id"], r["simhash"])
-        for r in dd.simhash64(sample, method="mapside").collect()
+        for r in dd.simhash64(sample).collect()
     }
     assert a == b, "map-side SimHash diverged from explode formulation"
     print(

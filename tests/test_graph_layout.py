@@ -502,19 +502,17 @@ def test_normalized_barrier_times_windows():
     ) == [2.0, 1.0]
 
 
-def test_loop_shuffle_partition_count_scales_with_edges(spark, monkeypatch):
+def test_loop_shuffle_partition_count_scales_with_edges(spark):
     """r12: the iterative loops derive their shuffle-partition count
     from the measured edge count — small graphs get a few real-core
     partitions (not a 32-way tiny-task storm), huge graphs get the
-    ~128 MB/partition floor regardless of core count, and the env
-    override wins when set."""
+    ~128 MB/partition floor regardless of core count."""
     from puma_matcher_spark.operators.graph import (
         _EDGE_ROW_BYTES,
         _LOOP_SCALE_TARGET,
         loop_shuffle_partition_count,
     )
 
-    monkeypatch.delenv("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS", raising=False)
     cores = spark.sparkContext.defaultParallelism
     assert loop_shuffle_partition_count(spark, 0) == 1
     assert loop_shuffle_partition_count(spark, 1_000) == 1
@@ -532,6 +530,45 @@ def test_loop_shuffle_partition_count_scales_with_edges(spark, monkeypatch):
         for n in (10**3, 10**5, 10**6, 10**8, 10**10)
     ]
     assert counts == sorted(counts)
-    # env override: >0 forces the count
-    monkeypatch.setenv("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS", "5")
-    assert loop_shuffle_partition_count(spark, 10**10) == 5
+
+
+def test_overlapping_loop_shuffle_scopes_restore_the_session_value(spark):
+    """Two loop scopes sharing one session (a graph loop and a
+    ``foreachBatch`` thread) entered A, B and left A, B: the session's
+    shuffle-partition setting must end where it started.  Unserialized,
+    B saves A's value on entry and restores it after A's restore."""
+    import threading
+
+    from puma_matcher_spark.operators.graph import loop_shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    errors: list[Exception] = []
+
+    def run(n_rows, wait_before, entered, wait_inside, exited):
+        try:
+            assert wait_before is None or wait_before.wait(30)
+            with loop_shuffle_partitions(spark, n_rows):
+                entered.set()
+                assert wait_inside.wait(30)
+            if exited is not None:
+                exited.set()
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+            for ev in (a_in, b_in, a_out):
+                ev.set()
+
+    a = threading.Thread(target=run, args=(0, None, a_in, b_in, a_out))
+    b = threading.Thread(target=run, args=(10**12, a_in, b_in, a_out, None))
+    try:
+        a.start()
+        b.start()
+        a.join(60)
+        b.join(60)
+        assert not a.is_alive() and not b.is_alive()
+        assert not errors, errors
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, orig)

@@ -195,6 +195,30 @@ def test_concurrent_query_invocation_thread_safe(spark, sf_small):
     assert all(f is frames[0] for f in frames)
 
 
+def test_reset_table_cache_releases_memo_intermediates(spark, sf_small):
+    """reset_table_cache() alone must drop every frame the candidate memo
+    persisted, its TF intermediate included: a TF frame rebuilt after the
+    reset starts uncached, so a cache-cold run rides no warm TF."""
+    from pyspark.storagelevel import StorageLevel
+
+    from puma_matcher_spark.operators import matcher as m
+    from puma_matcher_spark.queries import REGISTRY, _CAND_CACHE
+    from puma_matcher_spark.sources.testdata import load_tables, reset_table_cache
+
+    REGISTRY["entity_scores"].spark_fn(spark, sf_small).count()
+    app = spark.sparkContext.applicationId
+    owned = [df for k, df in _CAND_CACHE.items() if k[:2] == (app, sf_small)]
+    assert owned
+    reset_table_cache()
+    t = load_tables(spark, sf_small)
+    fresh_tf = [
+        m.entity_tf(t.entities()),
+        m.entity_tf(t.entities_secondary_orders()),
+    ]
+    for df in fresh_tf + owned:
+        assert df.storageLevel == StorageLevel.NONE
+
+
 def test_fork_child_does_not_mutate_parent(spark):
     from puma_matcher_spark.pipeline import Pipeline, PipelineConfig, Stage
 

@@ -181,3 +181,30 @@ def test_semantic_contamination_single_shingle_pass_plan(spark, sf_small):
     # computed for the df aggregate AND the candidate join)
     assert plan.count("Scan parquet") <= 6
     assert plan.count("Generate") <= 6
+
+
+def test_memoized_build_may_use_the_ring_and_drain_releases_all(spark):
+    """A memo build runs under the caching lock and may itself call
+    persist_rotating without deadlocking; a repeat key returns the
+    memoized frame unbuilt; drain() empties the table and unpersists
+    the result, the pinned intermediate and the ring entry."""
+    from puma_matcher_spark.functions import caching
+
+    def mid():
+        return spark.range(50).selectExpr("id", "id * 5 AS m")
+
+    def ring():
+        return spark.range(50).selectExpr("id", "id * 6 AS r")
+
+    def build(pin):
+        return pin(mid()).join(caching.persist_rotating(ring()), "id")
+
+    table: dict = {}
+    out = caching.memoized(table, "k", build)
+    assert caching.memoized(table, "k", lambda pin: 1 / 0) is out
+    assert out.count() == 50
+    frames = [out, mid(), ring()]
+    assert all(caching.is_cached(df) for df in frames)
+    caching.drain()
+    assert table == {}
+    assert not any(caching.is_cached(df) for df in frames)
