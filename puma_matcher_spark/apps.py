@@ -14,7 +14,13 @@ corpus:
    total/contextual scores.
 
 Everything returns DataFrames; callers choose sinks
-(persister.persist_parquet / sources.publish for blue/green).
+(persister.persist_parquet / sources.publish for blue/green).  The two
+frames the app fans out are ring-persisted through ``functions.caching``:
+each family's filtered candidates (read by the percentile action and the
+normalised output) and the canonical candidates, which the weight
+trainer, the statistics, the totals and every caller sink share.
+``reset_table_cache()`` / ``caching.drain()`` releases both; a read after
+that recomputes from lineage.
 """
 
 from __future__ import annotations
@@ -24,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions import caching
 from puma_matcher_spark.operators import filters as flt
 from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
@@ -37,6 +44,10 @@ from puma_matcher_spark.sources.testdata import Tables, load_tables
 
 @dataclass
 class MatcherResult:
+    """``candidates`` is ring-persisted (``functions.caching``) and shared by
+    every other field and every caller sink; ``reset_table_cache()`` /
+    ``caching.drain()`` releases it."""
+
     candidates: DataFrame          # canonical MATCH_CANDIDATE rows
     statistics: DataFrame          # per-document stats
     weights: DataFrame             # trained score weights
@@ -92,7 +103,9 @@ def _family_stages(t: Tables) -> list[Stage]:
             normalise_scores,
         )
 
-        cand = inputs["filtered"]
+        # persist: the percentile action and the normalised output both
+        # read the filtered frame, which would re-run the self-join
+        cand = caching.persist_rotating(inputs["filtered"])
         factor = normalisation_factor(cand, percentile=0.99, exact=False)
         return normalise_scores(cand, factor)
 
@@ -126,7 +139,11 @@ def run_full_matcher(
     # pipeline 2 — match saver over the cross-config union
     all_cand = creator.as_data_source("editor_output")
     filtered = flt.multiple_type_match_filter(all_cand, ["laboratory"])
-    canonical = dedup_candidates(canonicalize_pairs(filtered))
+    # persist: the weight trainer, the training labels, the statistics,
+    # the totals and the caller's sinks all read the canonical frame
+    canonical = caching.persist_rotating(
+        dedup_candidates(canonicalize_pairs(filtered))
+    )
     statistics = st.match_statistics(canonical)
 
     # optimizer — weights against derived accepted labels

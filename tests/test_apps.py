@@ -83,6 +83,34 @@ def test_full_matcher_end_to_end(spark, sf_small):
     assert result.total_scores.count() == types_per_pair.count()
 
 
+def test_full_matcher_sinks_share_one_persisted_candidate_frame(spark, sf_small):
+    """The canonical candidates are ring-persisted once and every sink reads
+    that cache instead of re-running the entity self-join; a reset releases
+    the cache and a later read recomputes the same rows from lineage.
+
+    No bound on ``Exchange`` tokens here: ``formatted_plan`` also prints the
+    cached subplan under ``InMemoryRelation``, so the count rises when the
+    persist lands (statistics: 386 without it, 830 with it)."""
+    from pyspark.storagelevel import StorageLevel
+
+    from puma_matcher_spark.functions import caching
+    from puma_matcher_spark.plans.inspect import formatted_plan
+    from puma_matcher_spark.sources.testdata import reset_table_cache
+
+    result = run_full_matcher(spark, sf_small, train_weights=True)
+    assert caching.is_cached(result.candidates)
+    for sink in (result.statistics, result.total_scores):
+        assert "InMemoryTableScan" in formatted_plan(sink)
+
+    cols = ("pair_id", "score_type", "score")
+    rows = sorted(result.candidates.select(*cols).collect())
+    assert rows
+    reset_table_cache()
+    assert result.candidates.storageLevel == StorageLevel.NONE
+    assert caching._RING == []
+    assert sorted(result.candidates.select(*cols).collect()) == rows
+
+
 @pytest.mark.slow
 def test_curation_app_end_to_end(spark, sf_small, tmp_path):
     from puma_matcher_spark.apps import run_curation_app
