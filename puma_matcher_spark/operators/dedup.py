@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 from pyspark.sql.window import Window
 
+from puma_matcher_spark.operators.graph import _round_barrier, graph_loop, node_broadcast
+
 
 @F.pandas_udf(StringType())
 def fold_diacritics(s: pd.Series) -> pd.Series:
@@ -256,143 +258,95 @@ def connected_components(
     when no label changes; RAISES if the cap is hit before convergence
     instead of returning a truncated answer.  Per round the new label
     frame is persisted and fully materialized — not for reuse but to
-    RESET Catalyst's size estimate to the real cached size (see the
-    stats-reset barrier note in ``_cc_loop``).
+    RESET Catalyst's size estimate to the real cached size (the
+    stats-reset barrier, ``operators/graph.py _round_barrier``).
     """
     if max_iterations < 1:
-        # with zero rounds the loop never runs, `changed` stays at its
-        # initial value and the convergence raise is skipped — the call
-        # would silently return identity labels (every node its own
-        # component), exactly the truncated-answer class the guard below
-        # exists to prevent (r9 ADVICE #5)
+        # zero rounds can never converge: reject the argument up front
+        # (r9 ADVICE #5) rather than report a non-convergence
         raise ValueError(
             f"max_iterations must be >= 1, got {max_iterations}"
         )
-    # persist the symmetrized edge list: it feeds EVERY iteration's join
-    # plus the label init — without the persist the entire upstream plan
+    # the symmetrized edge list feeds EVERY iteration's join plus the
+    # label init — graph_loop persists it, or the entire upstream plan
     # (for near-dup graphs, the whole MinHash-LSH candidate pipeline)
     # re-executes once per round (measured 2.4× on near_dup_clusters)
     sym = (
         edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .unionByName(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
         .distinct()
-        .persist()
     )
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    ).localCheckpoint()
-    try:
-        return _cc_loop(sym, labels, max_iterations)
-    finally:
-        # unpersist on every exit path — a task failure mid-loop must
-        # not pin the candidate-pair graph in executor memory
-        sym.unpersist()
-
-
-def _cc_loop(sym: DataFrame, labels: DataFrame, max_iterations: int) -> DataFrame:
-    from puma_matcher_spark.operators.graph import loop_shuffle_partitions
-
-    # size the loop's shuffle partitions from the measured edge count
-    # (r12 — same anti-scaling fix as the pagerank/LPA/k-core loops; the
-    # count reads the cache the labels init already materialized)
-    with loop_shuffle_partitions(sym.sparkSession, sym.count()):
-        return _cc_loop_scoped(sym, labels, max_iterations)
-
-
-def _cc_loop_scoped(
-    sym: DataFrame, labels: DataFrame, max_iterations: int
-) -> DataFrame:
-    from puma_matcher_spark.operators.graph import BROADCAST_NODES_MAX
-
-    # labels is O(nodes) and checkpoint-backed (no stats for plan-time
-    # auto-broadcast) — broadcast it explicitly when small so the
-    # persisted edge list never re-shuffles per round; web-scale graphs
-    # fall back to the co-partitioned shuffle join (same gate as the
-    # PageRank / label-propagation loops)
-    bc = (
-        F.broadcast
-        if labels.count() <= BROADCAST_NODES_MAX
-        else (lambda df: df)
-    )
-    changed = 0
-    prev = None
-    for i in range(max_iterations):
-        # candidate label for each node: min of its neighbours' labels
-        nbr = (
-            sym.join(bc(labels.withColumnRenamed("id", "dst")), "dst")
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-            .withColumnRenamed("src", "id")
-        )
-        # pointer-jump lookup built from the PREVIOUS round's labels
-        # (checkpoint-backed): component ← label of the label.  Folded
-        # into the SAME select as the hop, the round is
-        # L' = min(L, hop(L), L∘L) — one checkpoint per round like the
-        # plain loop, but covered distance ~doubles per round, so the
-        # iteration cap is a log bound instead of a hop count.
-        parents = labels.select(
-            F.col("id").alias("component"), F.col("component").alias("_parent")
-        )
-        # checkpoint BEFORE the convergence probe: the probe and the next
-        # round then both read the materialized frame instead of
-        # re-executing a plan that nests one join deeper per iteration
-        new_labels = (
-            labels.join(bc(nbr), "id", "left")
-            .join(bc(parents), "component", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_component", "component"),
-                    F.coalesce("_parent", "component"),
-                ).alias("component"),
+    with graph_loop(sym) as sym:
+        labels = (
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
+        ).localCheckpoint()
+        # labels is O(nodes) and checkpoint-backed (no stats for plan-time
+        # auto-broadcast) — broadcast it when small so the persisted edge
+        # list never re-shuffles per round
+        bc = node_broadcast(labels.count())
+        try:
+            for _ in range(max_iterations):
+                # candidate label for each node: min of its neighbours' labels
+                nbr = (
+                    sym.join(bc(labels.withColumnRenamed("id", "dst")), "dst")
+                    .groupBy("src")
+                    .agg(F.min("component").alias("nbr_component"))
+                    .withColumnRenamed("src", "id")
+                )
+                # pointer-jump lookup built from the PREVIOUS round's labels
+                # (checkpoint-backed): component ← label of the label.
+                # Folded into the SAME select as the hop, the round is
+                # L' = min(L, hop(L), L∘L) — one checkpoint per round like
+                # the plain loop, but covered distance ~doubles per round,
+                # so the iteration cap is a log bound instead of a hop count.
+                parents = labels.select(
+                    F.col("id").alias("component"),
+                    F.col("component").alias("_parent"),
+                )
+                # barrier BEFORE the convergence probe (graph._round_barrier:
+                # checkpoint + persist + FULL count, which resets Catalyst's
+                # size estimate): the probe and the next round then read the
+                # materialized frame, and the limit(1) probe below may
+                # short-circuit before every cache partition exists
+                new_labels = _round_barrier(
+                    labels.join(bc(nbr), "id", "left")
+                    .join(bc(parents), "component", "left")
+                    .select(
+                        "id",
+                        F.least(
+                            F.col("component"),
+                            F.coalesce("nbr_component", "component"),
+                            F.coalesce("_parent", "component"),
+                        ).alias("component"),
+                    )
+                )
+                changed = (
+                    new_labels.alias("n")
+                    .join(bc(labels.alias("o")), "id")
+                    .where(F.col("n.component") != F.col("o.component"))
+                    .limit(1)
+                    .count()
+                )
+                # the previous round's cache entry (a no-op on the initial
+                # labels, which only the checkpoint holds)
+                labels.unpersist(False)
+                labels = new_labels
+                if changed == 0:
+                    return labels
+            raise RuntimeError(
+                f"connected_components did not converge within {max_iterations} "
+                "iterations — graph diameter exceeds the doubling bound; raise "
+                "max_iterations (silently returning truncated components would "
+                "merge/split clusters wrongly)"
             )
-        ).localCheckpoint(eager=False)
-        # STATS-RESET barrier (round-9 finding, diagnosed via jstack):
-        # a checkpointed frame carries its ORIGIN plan's size estimate,
-        # and each round's joins MULTIPLY the inputs' sizeInBytes — the
-        # BigInteger digit count compounds ~3x per round, and from
-        # ~round 17 the driver spends its time in
-        # BigInteger.multiplyToomCook3 (measured 0.6 s → 240 s/round by
-        # round 23; plans, lineage and caching all provably flat).
-        # Persisting and materializing each round makes downstream stats
-        # read the REAL cached size, so estimates stay small forever.
-        # The checkpoint is LAZY so the count fills checkpoint blocks AND
-        # the cache in ONE job (eager + persist + count ran each round's
-        # plan twice, r10 review finding).
-        new_labels.persist()
-        new_labels.count()  # FULL materialization — the limit(1) probe
-        #                     below may short-circuit before every cache
-        #                     partition (and thus the real-size stats)
-        #                     exists
-        changed = (
-            new_labels.alias("n")
-            .join(bc(labels.alias("o")), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        if prev is not None:
-            prev.unpersist(False)
-        prev = new_labels
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations — graph diameter exceeds the doubling bound; raise "
-            "max_iterations (silently returning truncated components would "
-            "merge/split clusters wrongly)"
-        )
-    # drop the final round's CacheManager entry (it otherwise leaks one
-    # O(nodes) cache entry per call, r9 ADVICE #5) — the frame stays
-    # localCheckpoint-backed, so callers re-read the materialized RDD
-    # blocks, not the loop's lineage
-    labels.unpersist(False)
-    return labels
+        finally:
+            # drop the final round's CacheManager entry on every exit path
+            # (it otherwise leaks one O(nodes) entry per call, r9 ADVICE #5)
+            # — the frame stays localCheckpoint-backed, so callers re-read
+            # the materialized RDD blocks, not the loop's lineage
+            labels.unpersist(False)
 
 
 def component_argmax(

@@ -1,4 +1,6 @@
-"""Graph analytics beyond connected components: PageRank.
+"""Iterative DataFrame graph loops: PageRank, label propagation and
+k-core, plus the scaffold every loop shares (connected components in
+operators/dedup.py included).
 
 The reference's only graph operator is GraphX ``connectedComponents``
 (PersonDeduplicationStage.scala:150-159), rebuilt in operators/dedup.py.
@@ -6,7 +8,12 @@ PageRank is the additive centrality operator a corpus pipeline uses to
 weight documents by link authority (the classic web-crawl quality prior
 for pre-training data selection).
 
-Spark-first shape: each iteration is
+Shared scaffold: :func:`graph_loop` persists, counts, sizes (the loop's
+shuffle partitions) and releases the input edge list; :func:`node_broadcast`
+gates the per-round O(nodes) frame's broadcast; :func:`_round_barrier`
+and :class:`_CadencedBarrier` reset Catalyst's size estimate per round.
+
+PageRank shape: each iteration is
 
     contribs = edges ⋈ ranks (on src)  →  groupBy(dst).sum
     ranks    = nodes ⟕ contribs, rank = (1-d)/N + d·(contrib + dangle/N)
@@ -15,11 +22,6 @@ i.e. ONE shuffle join + ONE hash aggregate per iteration, with the node
 frame reused.  Dangling-node mass (out-degree 0) is redistributed
 uniformly through a 1-row scalar aggregate, so total mass stays 1.0 —
 the invariant the ``pagerank_mass`` property query checks.
-
-At scale: ranks/edges keep a stable hash partitioning on the join key
-across iterations (one co-partitioned shuffle each); `localCheckpoint`
-every few rounds truncates the growing lineage exactly like the
-connected-components loop.
 """
 
 from __future__ import annotations
@@ -111,6 +113,34 @@ def loop_shuffle_partitions(spark, n_rows: int):
         _SHUFFLE_SCOPE.release()
 
 
+@contextmanager
+def graph_loop(edges: DataFrame):
+    """Scope of one iterative graph loop over ``edges``: persists the
+    edge list (every round and the setup probes scan it — without the
+    persist the upstream derivation re-runs once per scan), counts it
+    once and sizes the loop's shuffle partitions from that count.  Yields
+    the persisted frame; on every exit path restores the conf and
+    unpersists the edge list only if this scope persisted it — a frame
+    an outside owner already caches (the memoized purchase edges) is
+    used as is and stays cached."""
+    owned = not is_cached(edges)
+    if owned:
+        edges = edges.persist()
+    try:
+        with loop_shuffle_partitions(edges.sparkSession, edges.count()):
+            yield edges
+    finally:
+        if owned:
+            edges.unpersist()
+
+
+def node_broadcast(n_nodes: int):
+    """Join-side wrapper for a loop's per-round O(nodes) frame:
+    ``F.broadcast`` up to :data:`BROADCAST_NODES_MAX` nodes, else the
+    identity (the co-partitioned shuffle join)."""
+    return F.broadcast if n_nodes <= BROADCAST_NODES_MAX else (lambda df: df)
+
+
 #: materialization cadence for the iterative loops' stats-reset barrier:
 #: every round is checkpoint-ed and persisted (so plans reference a
 #: lineage-capped InMemoryRelation, compute-once within the next job),
@@ -125,8 +155,8 @@ BARRIER_CADENCE = 4
 
 def _round_barrier(df: DataFrame, full: bool = True) -> DataFrame:
     """STATS-RESET barrier for iterative DataFrame loops (the round-9
-    connected-components diagnosis, operators/dedup.py ``_cc_loop`` and
-    PLANS.md: a localCheckpoint-ed frame carries its ORIGIN plan's
+    connected-components diagnosis via jstack, PLANS.md: a
+    localCheckpoint-ed frame carries its ORIGIN plan's
     sizeInBytes estimate, each round's joins MULTIPLY the inputs'
     estimates, and the BigInteger digit count compounds ~3× per round —
     from ~round 16 the driver burns its time in BigInteger arithmetic,
@@ -165,7 +195,8 @@ class _CadencedBarrier:
     frame never references cached helpers after they unpersist) and
     defers the previous frames' unpersist to the next full barrier,
     where they are guaranteed materialized-and-stale.  One shared
-    implementation so the three loops cannot drift (r11 review).
+    implementation so the three loops cannot drift (r11 review); used as
+    a context manager, whose exit releases the frames still held.
 
     ``compose=True`` (r11): light rounds return the round's plan
     UNTOUCHED — no checkpoint, no persist.  A lazy ``localCheckpoint``
@@ -206,6 +237,18 @@ class _CadencedBarrier:
                 p.unpersist(False)
             self._pending = [df]
         return df
+
+    def __enter__(self) -> _CadencedBarrier:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        """Drop every cache entry the barrier still holds, on every exit
+        path — after the last round that is the final frame only, which
+        stays localCheckpoint-backed, so later actions re-read its
+        blocks instead of the loop's lineage."""
+        for p in self._pending:
+            p.unpersist(False)
+        self._pending = []
 
 
 def normalized_barrier_times(
@@ -273,135 +316,113 @@ def pagerank(
     check the mass invariant, which is exact to rounding, plus a
     rows-only full ranking).
     """
-    # the setup below scans the edge list several times (node frame,
-    # degree, weighted edges, structural probes); persisting it first
-    # makes the upstream derivation — often a join chain like orders ⋈
-    # lineitem ⋈ distinct — run ONCE instead of once per probe.  A
-    # caller-persisted frame (e.g. the memoized purchase edge list) is
-    # left alone: not re-persisted, and NOT unpersisted on exit.
-    caller_persisted = is_cached(edges)
-    if not caller_persisted:
-        edges = edges.persist()
-    # materialize the edge cache and size the loop's shuffle partitions
-    # from the measured edge count (r12 — see loop_shuffle_partitions);
-    # the count is one cheap job over the cache the setup needs anyway
-    n_edges = edges.count()
-    with loop_shuffle_partitions(edges.sparkSession, n_edges):
-        return _pagerank_loop(
-            edges, caller_persisted, damping, n_iter, round_times
-        )
-
-
-def _pagerank_loop(
-    edges: DataFrame,
-    caller_persisted: bool,
-    damping: float,
-    n_iter: int,
-    round_times: list[float] | None,
-) -> DataFrame:
-    # ONE setup job answers every structural question the loop needs:
-    # src-side ∪ dst-side full-outer merge gives the node frame plus
-    # per-node has_out/has_in flags, and a single aggregate over it
-    # yields N, the dangling count (no out-edge → sink), and the
-    # no-in-link count — previously three separate shuffle jobs
-    # (count / isEmpty / isEmpty), each re-scanning the cached edges
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("has_out", F.lit(True))
-        .join(
-            edges.select(F.col("dst").alias("node"))
+    with graph_loop(edges) as edges:
+        # ONE setup job answers every structural question the loop needs:
+        # src-side ∪ dst-side full-outer merge gives the node frame plus
+        # per-node has_out/has_in flags, and a single aggregate over it
+        # yields N, the dangling count (no out-edge → sink), and the
+        # no-in-link count — previously three separate shuffle jobs
+        # (count / isEmpty / isEmpty), each re-scanning the cached edges
+        nodes = (
+            edges.select(F.col("src").alias("node"))
             .distinct()
-            .withColumn("has_in", F.lit(True)),
-            "node",
-            "full_outer",
+            .withColumn("has_out", F.lit(True))
+            .join(
+                edges.select(F.col("dst").alias("node"))
+                .distinct()
+                .withColumn("has_in", F.lit(True)),
+                "node",
+                "full_outer",
+            )
+            .persist()
         )
-        .persist()
-    )
-    # the loop is driver-controlled and materializes every round anyway
-    # (eager localCheckpoint), so the probe row is taken ONCE driver-side
-    # — a scalar subquery here would re-execute its job in every round's
-    # checkpoint instead
-    probe = nodes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(~F.coalesce(F.col("has_out"), F.lit(False)), 1)).alias(
-            "n_dangling"
-        ),
-        F.count(F.when(~F.coalesce(F.col("has_in"), F.lit(False)), 1)).alias(
-            "n_no_inlink"
-        ),
-    ).collect()[0]
-    n_nodes = probe["n"]
-    n = F.lit(float(n_nodes))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("out_deg"))
-    weighted = (
-        edges.join(deg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-        .persist()
-    )
-    dangling = nodes.where(~F.coalesce(F.col("has_out"), F.lit(False))).select(
-        "node"
-    )
-    # a graph with no sinks (e.g. symmetrized) skips the per-iteration
-    # dangling-mass job entirely — known from the probe row, not per round
-    has_dangling = probe["n_dangling"] > 0
-    # when every node also has an IN-link (always true for symmetrized
-    # graphs), the contribution aggregate already covers every node, so
-    # the per-round "nodes ⟕ contribs" completion join is a structural
-    # no-op costing one shuffle + join per round — skip it
-    all_have_inlinks = probe["n_no_inlink"] == 0
-    # ranks is O(nodes) and checkpoint-backed (no stats) — broadcast it
-    # explicitly when small so the cached edge frame never re-shuffles
-    small = n_nodes <= BROADCAST_NODES_MAX
-    bc = F.broadcast if small else (lambda df: df)
-    ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
-    # sink-free + fully-inlinked graphs consume each round's ranks in
-    # exactly ONE place (the contribution join — no dangle scalar, no
-    # completion join), so light rounds can compose instead of paying a
-    # per-round checkpoint execution (see _CadencedBarrier)
-    barrier = _CadencedBarrier(
-        n_iter, compose=not has_dangling and all_have_inlinks
-    )
-    for i in range(n_iter):
-        t0 = time.monotonic() if round_times is not None else 0.0
-        contribs = (
-            weighted.join(bc(ranks.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+        deg = edges.groupBy("src").agg(
+            F.count(F.lit(1)).cast("double").alias("out_deg")
         )
-        # mass parked on dangling nodes (no outgoing edge) this round
-        dangle = (
-            dangling.join(ranks, "node")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
-            .scalar()
-            if has_dangling
-            else F.lit(0.0)
+        weighted = (
+            edges.join(deg, "src")
+            .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
+            .persist()
         )
-        base = contribs if all_have_inlinks else nodes.join(
-            contribs, "node", "left"
-        )
-        ranks = base.select(
-            "node",
-            (
-                (1.0 - damping) / n
-                + damping * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangle / n)
-            ).alias("rank"),
-        )
-        # checkpoint every round INCLUDING the last: the final frame must
-        # not reference the cached helpers below after they unpersist.
-        # A FULL barrier (checkpoint + persist + materializing count)
-        # runs every BARRIER_CADENCE-th round and always on the last —
-        # it executes the accumulated light rounds (each computed once,
-        # cache-on-compute) and resets Catalyst's size estimate before
-        # the BigInteger stats compounding can bite (~16 levels).
-        # Light rounds only checkpoint+persist (no job).
-        ranks = barrier.round(i, ranks)
-        if round_times is not None:
-            round_times.append(time.monotonic() - t0)
-    ranks.unpersist(False)
-    for c in (nodes, weighted) if caller_persisted else (edges, nodes, weighted):
-        c.unpersist()
-    return ranks
+        try:
+            # the loop is driver-controlled and materializes every round
+            # anyway, so the probe row is taken ONCE driver-side — a scalar
+            # subquery here would re-execute its job in every round's
+            # checkpoint instead
+            probe = nodes.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(
+                    F.when(~F.coalesce(F.col("has_out"), F.lit(False)), 1)
+                ).alias("n_dangling"),
+                F.count(
+                    F.when(~F.coalesce(F.col("has_in"), F.lit(False)), 1)
+                ).alias("n_no_inlink"),
+            ).collect()[0]
+            n = F.lit(float(probe["n"]))
+            dangling = nodes.where(
+                ~F.coalesce(F.col("has_out"), F.lit(False))
+            ).select("node")
+            # a graph with no sinks (e.g. symmetrized) skips the per-round
+            # dangling-mass job entirely — known from the probe row
+            has_dangling = probe["n_dangling"] > 0
+            # when every node also has an IN-link (always true for
+            # symmetrized graphs), the contribution aggregate already
+            # covers every node, so the per-round "nodes ⟕ contribs"
+            # completion join is a structural no-op — skip it
+            all_have_inlinks = probe["n_no_inlink"] == 0
+            # ranks is O(nodes) and checkpoint-backed (no stats)
+            bc = node_broadcast(probe["n"])
+            ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
+            # sink-free + fully-inlinked graphs consume each round's ranks
+            # in exactly ONE place (the contribution join — no dangle
+            # scalar, no completion join), so light rounds can compose
+            # instead of paying a per-round checkpoint execution (see
+            # _CadencedBarrier)
+            with _CadencedBarrier(
+                n_iter, compose=not has_dangling and all_have_inlinks
+            ) as barrier:
+                for i in range(n_iter):
+                    t0 = time.monotonic() if round_times is not None else 0.0
+                    contribs = (
+                        weighted.join(
+                            bc(ranks.withColumnRenamed("node", "src")), "src"
+                        )
+                        .groupBy(F.col("dst").alias("node"))
+                        .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+                    )
+                    # mass parked on dangling nodes (no outgoing edge)
+                    dangle = (
+                        dangling.join(ranks, "node")
+                        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
+                        .scalar()
+                        if has_dangling
+                        else F.lit(0.0)
+                    )
+                    base = contribs if all_have_inlinks else nodes.join(
+                        contribs, "node", "left"
+                    )
+                    contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
+                    ranks = base.select(
+                        "node",
+                        (
+                            (1.0 - damping) / n + damping * (contrib + dangle / n)
+                        ).alias("rank"),
+                    )
+                    # barrier every round INCLUDING the last: the final
+                    # frame must not reference the cached helpers after
+                    # they unpersist.  A FULL barrier (checkpoint + persist
+                    # + materializing count) runs every BARRIER_CADENCE-th
+                    # round and always on the last — it executes the
+                    # accumulated light rounds and resets Catalyst's size
+                    # estimate before the BigInteger stats compounding can
+                    # bite (~16 levels)
+                    ranks = barrier.round(i, ranks)
+                    if round_times is not None:
+                        round_times.append(time.monotonic() - t0)
+            return ranks
+        finally:
+            nodes.unpersist()
+            weighted.unpersist()
 
 
 def label_propagation(
@@ -428,32 +449,16 @@ def label_propagation(
     (``_round_barrier`` — deep n_iter must not hit the BigInteger
     size-estimate blowup).
     """
-    caller_persisted = is_cached(edges)
-    sym = edges if caller_persisted else edges.persist()
-    # size the loop's shuffle partitions from the measured edge count
-    # (r12 — see loop_shuffle_partitions); the count materializes the
-    # cache the label init scans anyway
-    with loop_shuffle_partitions(sym.sparkSession, sym.count()):
-        return _lpa_loop(sym, caller_persisted, n_iter, round_times)
-
-
-def _lpa_loop(
-    sym: DataFrame,
-    caller_persisted: bool,
-    n_iter: int,
-    round_times: list[float] | None,
-) -> DataFrame:
-    labels = (
-        edge_nodes(sym)
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    # same gate as pagerank: labels is O(nodes), checkpoint-backed
-    bc = F.broadcast if labels.count() <= BROADCAST_NODES_MAX else (lambda df: df)
-    # each round's labels frame feeds exactly one consumer (the
-    # neighbour join), so light rounds compose (see _CadencedBarrier)
-    barrier = _CadencedBarrier(n_iter, compose=True)
-    try:
+    # each round's labels frame feeds exactly one consumer (the neighbour
+    # join), so light rounds compose (see _CadencedBarrier)
+    with graph_loop(edges) as sym, _CadencedBarrier(n_iter, compose=True) as barrier:
+        labels = (
+            edge_nodes(sym)
+            .withColumn("label", F.col("node"))
+            .localCheckpoint()
+        )
+        # same gate as pagerank: labels is O(nodes), checkpoint-backed
+        bc = node_broadcast(labels.count())
         for i in range(n_iter):
             t0 = time.monotonic() if round_times is not None else 0.0
             # winner per node = (max count, then min label): expressed as
@@ -473,11 +478,7 @@ def _lpa_loop(
             )
             if round_times is not None:
                 round_times.append(time.monotonic() - t0)
-        labels.unpersist(False)
         return labels
-    finally:
-        if not caller_persisted:
-            sym.unpersist()
 
 
 def label_propagation_sql(edges_cte: str, n_iter: int = 5) -> str:
@@ -524,77 +525,57 @@ def k_core(
     one round deep AND deep peels cannot hit the BigInteger
     size-estimate blowup.
     """
-    cur = edges.localCheckpoint()
-    # size the peel loop's shuffle partitions from the starting edge
-    # count (r12 — see loop_shuffle_partitions; survivors only shrink)
-    with loop_shuffle_partitions(cur.sparkSession, cur.count()):
-        return _k_core_loop(cur, k, n_rounds, round_times)
-
-
-def _k_core_loop(
-    cur: DataFrame,
-    k: int,
-    n_rounds: int,
-    round_times: list[float] | None,
-) -> DataFrame:
-    # keep is O(surviving nodes) ≤ O(nodes); gate once on the starting
-    # node count — survivors only shrink round over round
-    bc = (
-        F.broadcast
-        if edge_nodes(cur).count() <= BROADCAST_NODES_MAX
-        else (lambda df: df)
-    )
-    barrier = _CadencedBarrier(n_rounds)
-    for i in range(n_rounds):
-        t0 = time.monotonic() if round_times is not None else 0.0
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-        # LAZY checkpoint (r11): an eager one here would run a per-round
-        # job (scan cur → deg) and defeat the barrier cadence below.
-        # localCheckpoint still marks the RDD persisted, so the two
-        # semi-join references compute keep once at the next
-        # materializing action, and its lineage stays capped.
-        keep = deg.where(F.col("c") >= k).select("src").localCheckpoint(
-            eager=False
+    with graph_loop(edges) as cur, _CadencedBarrier(n_rounds) as barrier:
+        # keep is O(surviving nodes) ≤ O(nodes); gate once on the starting
+        # node count — survivors only shrink round over round
+        bc = node_broadcast(edge_nodes(cur).count())
+        for i in range(n_rounds):
+            t0 = time.monotonic() if round_times is not None else 0.0
+            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
+            # LAZY checkpoint (r11): an eager one here would run a per-round
+            # job (scan cur → deg) and defeat the barrier cadence below.
+            # localCheckpoint still marks the RDD persisted, so the two
+            # semi-join references compute keep once at the next
+            # materializing action, and its lineage stays capped.
+            keep = deg.where(F.col("c") >= k).select("src").localCheckpoint(
+                eager=False
+            )
+            # both semi-joins reference the SAME keep frame (the dst side by
+            # expression, not a renamed copy) so the two broadcast exchanges
+            # canonicalize identically and ReuseExchange ships keep once per
+            # round instead of twice
+            kb = bc(keep)
+            survivors = cur.join(kb, "src", "left_semi")
+            # the alias only disambiguates the self-reference for the
+            # analyzer; canonicalization strips it, so both broadcast
+            # exchanges still dedupe
+            cur = barrier.round(
+                i,
+                survivors.join(
+                    kb.alias("kcore_keep"),
+                    F.col("dst") == F.col("kcore_keep.src"),
+                    "left_semi",
+                ),
+            )
+            if round_times is not None:
+                round_times.append(time.monotonic() - t0)
+        out = cur.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
         )
-        # both semi-joins reference the SAME keep frame (the dst side by
-        # expression, not a renamed copy) so the two broadcast exchanges
-        # canonicalize identically and ReuseExchange ships keep once per
-        # round instead of twice
-        kb = bc(keep)
-        survivors = cur.join(kb, "src", "left_semi")
-        # the alias only disambiguates the self-reference for the
-        # analyzer; canonicalization strips it, so both broadcast
-        # exchanges still dedupe
-        cur = barrier.round(
-            i,
-            survivors.join(
-                kb.alias("kcore_keep"),
-                F.col("dst") == F.col("kcore_keep.src"),
-                "left_semi",
-            ),
-        )
-        if round_times is not None:
-            round_times.append(time.monotonic() - t0)
-    out = cur.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    # convergence probe (round-9, same contract as connected_components):
-    # a survivor below k means the peel cascade was still removing when
-    # the rounds ran out — the result would NOT be the k-core, and both
-    # engines agreeing on a truncated peel is exactly the failure parity
-    # cannot catch.  Fail loudly instead.
-    try:
+        # convergence probe (round-9, same contract as connected_components):
+        # a survivor below k means the peel cascade was still removing when
+        # the rounds ran out — the result would NOT be the k-core, and both
+        # engines agreeing on a truncated peel is exactly the failure parity
+        # cannot catch.  Fail loudly instead.  The probe reads the final
+        # round's cache before the barrier releases it; later actions on
+        # `out` re-read that round's checkpoint blocks.
         if out.where(F.col("degree") < k).limit(1).count():
             raise RuntimeError(
                 f"k_core: peeling had not converged after {n_rounds} rounds "
                 "(a survivor still has degree < k) — raise n_rounds; the "
                 "fixed-round result is not the k-core"
             )
-    finally:
-        # the probe read the cache; later actions on `out` re-read the
-        # final round's checkpoint blocks (no CacheManager entry leak)
-        cur.unpersist(False)
-    return out
+        return out
 
 
 def pagerank_sql(

@@ -246,16 +246,24 @@ def test_connected_components_long_chain_converges_in_log_rounds(spark):
 
 def test_connected_components_raises_instead_of_truncating(spark):
     """An under-provisioned iteration cap must FAIL LOUDLY, never return
-    truncated (wrongly split) components."""
+    truncated (wrongly split) components — and the failure path must
+    release what the loop held: no CacheManager entry (the last round's
+    labels included) and the session's shuffle-partition setting."""
     import pytest
 
     from puma_matcher_spark.operators.dedup import connected_components
 
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "id1 LONG, id2 LONG"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iterations=3).collect()
+    assert cm.isEmpty(), "the non-converged loop leaked a cache entry"
+    assert spark.conf.get(key) == before
 
 
 def test_connected_components_rejects_zero_iterations(spark):

@@ -455,6 +455,7 @@ def test_iterative_loops_leave_no_cache_entries(spark):
     be unpersisted on exit (the final frame stays checkpoint-backed),
     oreach call leaks O(nodes) CacheManager entries for the session's
     lifetime.  Pin it through the JVM cache manager."""
+    from puma_matcher_spark.functions.caching import is_cached
     from puma_matcher_spark.operators.dedup import connected_components
     from puma_matcher_spark.operators.graph import (
         k_core,
@@ -479,6 +480,16 @@ def test_iterative_loops_leave_no_cache_entries(spark):
         df.select(F.col("src").alias("id1"), F.col("dst").alias("id2"))
     ).count()
     assert cm.isEmpty(), "an iterative loop leaked a CacheManager entry"
+    # an edge list the caller already caches (the memoized purchase
+    # edges) is used as is: it stays cached, and the loops add no entry
+    # of their own — unpersisting the caller's frame empties the cache
+    sym.persist()
+    pagerank(sym, n_iter=3).count()
+    label_propagation(sym, n_iter=2).count()
+    k_core(sym, k=2, n_rounds=2).count()
+    assert is_cached(sym), "a loop unpersisted the caller's edge list"
+    sym.unpersist(blocking=True)
+    assert cm.isEmpty(), "a loop added a cache entry beside the caller's"
 
 
 def test_normalized_barrier_times_windows():

@@ -34,10 +34,20 @@ def test_rows_only_queries_execute(spark, sf_small):
 def test_ingest_and_dedup_kernels_match_oracle(spark, sf_small):
     """Default-lane parity smoke: the ingest and dedup kernels the
     streaming-ingest benchmark drives (exact and MinHash-LSH
-    batch-vs-corpus admission, blocked-pair connected components) must
-    match their DuckDB twins, so the fast lane still exercises the
-    oracle while the full sweep above stays slow-marked."""
-    names = ["incremental_ingest", "incremental_near_dups", "dedup_components_cc"]
+    batch-vs-corpus admission, blocked-pair connected components) and
+    the three purchase-graph loops (PageRank mass and top ranking,
+    label-propagation communities, k-core peeling) must match their
+    DuckDB twins, so the fast lane still exercises the oracle while the
+    full sweep above stays slow-marked."""
+    names = [
+        "incremental_ingest",
+        "incremental_near_dups",
+        "dedup_components_cc",
+        "pagerank_mass",
+        "pagerank_top",
+        "purchase_communities",
+        "purchase_kcore",
+    ]
     results = run_all(spark, sf_small, names=names)
     failed = [str(r) for r in results if not r.ok]
     assert not failed, "\n".join(failed)
